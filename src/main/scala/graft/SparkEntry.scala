@@ -1033,7 +1033,8 @@ object SparkEntry {
     * with it and surface rows outside the top-k. The materialized ids
     * then reach the documents scan as an isin filter (predicate
     * pushdown); the k matching rows are the broadcast BUILD side.
-    * Mirrors DocumentStore.enhanceWithFullMetadata. */
+    * DocumentStore.enhanceWithFullMetadata takes the same first two
+    * steps, then collects its k payload rows and joins on the driver. */
   private def qEnrichmentJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hitRows = qTopkCosine(s, dir).collect()
@@ -1272,8 +1273,8 @@ object SparkEntry {
     * [[graft.ops.Ranking.globalRowNumber]] (range shuffle + zipWithIndex,
     * every stage parallel), not an unpartitioned window: the previous
     * SharedSql form sent every surviving document to one reducer for
-    * the rank. Same discipline as [[graft.store.DocumentStore]]'s own
-    * delete path (orderBy + zipWithIndex `withDenseId`). */
+    * the rank. Same discipline as [[graft.store.DocumentStore]]'s
+    * predicate delete (orderBy + zipWithIndex `withDenseId`). */
   private def qDeleteAntijoin(s: SparkSession, dir: String): DataFrame = {
     val survivors = table(s, dir, "documents")
       .where(col("doc_id") % 7 =!= 0)

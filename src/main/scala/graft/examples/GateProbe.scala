@@ -51,92 +51,105 @@ object GateProbe {
     }
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val scratchRoot = java.nio.file.Files.createTempDirectory("gate-probe").toString
+    // One round of each modality, keyed by name: the map is the only
+    // list of modalities, so the check below and the dispatch agree.
+    val byModality = Map[String, (Int, String) => Unit](
+      ("image", { (round: Int, idx: String) =>
+        val fixture = s"$scratchRoot/assets_$round"
+        phase("fixture synth+write") {
+          graft.ops.Multimodal.synthesizeCellImageAssets(docs, "doc_id")
+            .write.mode("overwrite").parquet(fixture)
+        }
+        val assets = phase("fixture read") {
+          spark.read.parquet(fixture).withColumn("ts", col("asset_id"))
+        }
+        phase("batch0 screen") {
+          graft.streaming.StreamingOps.imageNearDupScreenBatch(
+            assets.where(col("asset_id") % 2 === 0), idx, 0L,
+            "asset_id", "content", "ts")
+        }
+        val kept = phase("batch1 screen") {
+          graft.streaming.StreamingOps.imageNearDupScreenBatch(
+            assets.where(col("asset_id") % 2 === 1), idx, 1L,
+            "asset_id", "content", "ts")
+        }
+        phase("final count") { kept.select("asset_id").count() }
+      }),
+      ("text", { (round: Int, idx: String) =>
+        val staged = docs.select(col("doc_id"), col("text"))
+          .withColumn("ts", col("doc_id"))
+        phase("batch0 screen") {
+          graft.streaming.StreamingOps.nearDupScreenBatch(
+            staged.where(col("doc_id") % 2 === 0), idx, 0L,
+            "doc_id", "text", "ts")
+        }
+        val kept = phase("batch1 screen") {
+          graft.streaming.StreamingOps.nearDupScreenBatch(
+            staged.where(col("doc_id") % 2 === 1), idx, 1L,
+            "doc_id", "text", "ts")
+        }
+        phase("final count") { kept.select("doc_id").count() }
+      }),
+      ("audio", { (round: Int, idx: String) =>
+        val fixture = s"$scratchRoot/wav_$round"
+        phase("fixture synth+write") {
+          graft.ops.Multimodal.synthesizeShaAudioAssets(docs, "doc_id")
+            .write.mode("overwrite").parquet(fixture)
+        }
+        val assets = phase("fixture read") {
+          spark.read.parquet(fixture).withColumn("ts", col("asset_id"))
+        }
+        phase("batch0 screen") {
+          graft.streaming.StreamingOps.audioNearDupScreenBatch(
+            assets.where(col("asset_id") % 2 === 0), idx, 0L,
+            "asset_id", "content", "ts")
+        }
+        val kept = phase("batch1 screen") {
+          graft.streaming.StreamingOps.audioNearDupScreenBatch(
+            assets.where(col("asset_id") % 2 === 1), idx, 1L,
+            "asset_id", "content", "ts")
+        }
+        phase("final count") { kept.select("asset_id").count() }
+      }),
+      ("sem", { (round: Int, idx: String) =>
+        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        val model = phase("ivf fit (cached)") {
+          graft.index.IvfIndex.fitCached(
+            s"$sfDir/embeddings", emb, "embedding",
+            nlist = 8, maxIter = 2, initMode = "random",
+            fitFraction = 0.25, fitPartitions = 2)
+        }
+        val staged = emb.select(col("vec_id"), col("embedding"))
+          .withColumn("ts", col("vec_id"))
+        phase("batch0 screen") {
+          graft.streaming.StreamingOps.semNearDupScreenBatch(
+            staged.where(col("vec_id") % 2 === 0), idx, 0L,
+            "vec_id", "embedding", "ts", model, threshold = 0.4)
+        }
+        val kept = phase("batch1 screen") {
+          graft.streaming.StreamingOps.semNearDupScreenBatch(
+            staged.where(col("vec_id") % 2 === 1), idx, 1L,
+            "vec_id", "embedding", "ts", model, threshold = 0.4)
+        }
+        phase("final count") { kept.select("vec_id").count() }
+      }))
+    val found: Option[(Int, String) => Unit] =
+      if (modality.startsWith("entry:")) {
+        val qn = modality.stripPrefix("entry:")
+        graft.SparkEntry.queries.get(qn).map { fn => (_: Int, _: String) =>
+          phase(s"$qn full builder+count") { fn(spark, sfDir).count() }; ()
+        }
+      } else byModality.get(modality)
+    val runRound = found.getOrElse {
+      System.err.println(s"unknown modality '$modality' — expected " +
+        s"${byModality.keys.toSeq.sorted.mkString("|")}|entry:<query>")
+      graft.MainUtil.deleteRecursively(new java.io.File(scratchRoot))
+      spark.stop()
+      sys.exit(2)
+    }
     try (1 to rounds).foreach { round =>
       println(s"--- round $round ($modality) ---")
-      val idx = s"$scratchRoot/idx_$round"
-      modality match {
-        case e if e.startsWith("entry:") =>
-          val qn = e.stripPrefix("entry:")
-          val fn = graft.SparkEntry.queries(qn)
-          phase(s"$qn full builder+count") { fn(spark, sfDir).count() }
-        case "image" =>
-          val fixture = s"$scratchRoot/assets_$round"
-          phase("fixture synth+write") {
-            graft.ops.Multimodal.synthesizeCellImageAssets(docs, "doc_id")
-              .write.mode("overwrite").parquet(fixture)
-          }
-          val assets = phase("fixture read") {
-            spark.read.parquet(fixture).withColumn("ts", col("asset_id"))
-          }
-          phase("batch0 screen") {
-            graft.streaming.StreamingOps.imageNearDupScreenBatch(
-              assets.where(col("asset_id") % 2 === 0), idx, 0L,
-              "asset_id", "content", "ts")
-          }
-          val kept = phase("batch1 screen") {
-            graft.streaming.StreamingOps.imageNearDupScreenBatch(
-              assets.where(col("asset_id") % 2 === 1), idx, 1L,
-              "asset_id", "content", "ts")
-          }
-          phase("final count") { kept.select("asset_id").count() }
-        case "text" =>
-          val staged = docs.select(col("doc_id"), col("text"))
-            .withColumn("ts", col("doc_id"))
-          phase("batch0 screen") {
-            graft.streaming.StreamingOps.nearDupScreenBatch(
-              staged.where(col("doc_id") % 2 === 0), idx, 0L,
-              "doc_id", "text", "ts")
-          }
-          val kept = phase("batch1 screen") {
-            graft.streaming.StreamingOps.nearDupScreenBatch(
-              staged.where(col("doc_id") % 2 === 1), idx, 1L,
-              "doc_id", "text", "ts")
-          }
-          phase("final count") { kept.select("doc_id").count() }
-        case "audio" =>
-          val fixture = s"$scratchRoot/wav_$round"
-          phase("fixture synth+write") {
-            graft.ops.Multimodal.synthesizeShaAudioAssets(docs, "doc_id")
-              .write.mode("overwrite").parquet(fixture)
-          }
-          val assets = phase("fixture read") {
-            spark.read.parquet(fixture).withColumn("ts", col("asset_id"))
-          }
-          phase("batch0 screen") {
-            graft.streaming.StreamingOps.audioNearDupScreenBatch(
-              assets.where(col("asset_id") % 2 === 0), idx, 0L,
-              "asset_id", "content", "ts")
-          }
-          val kept = phase("batch1 screen") {
-            graft.streaming.StreamingOps.audioNearDupScreenBatch(
-              assets.where(col("asset_id") % 2 === 1), idx, 1L,
-              "asset_id", "content", "ts")
-          }
-          phase("final count") { kept.select("asset_id").count() }
-        case "sem" =>
-          val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          val model = phase("ivf fit (cached)") {
-            graft.index.IvfIndex.fitCached(
-              s"$sfDir/embeddings", emb, "embedding",
-              nlist = 8, maxIter = 2, initMode = "random",
-              fitFraction = 0.25, fitPartitions = 2)
-          }
-          val staged = emb.select(col("vec_id"), col("embedding"))
-            .withColumn("ts", col("vec_id"))
-          phase("batch0 screen") {
-            graft.streaming.StreamingOps.semNearDupScreenBatch(
-              staged.where(col("vec_id") % 2 === 0), idx, 0L,
-              "vec_id", "embedding", "ts", model, threshold = 0.4)
-          }
-          val kept = phase("batch1 screen") {
-            graft.streaming.StreamingOps.semNearDupScreenBatch(
-              staged.where(col("vec_id") % 2 === 1), idx, 1L,
-              "vec_id", "embedding", "ts", model, threshold = 0.4)
-          }
-          phase("final count") { kept.select("vec_id").count() }
-        case other =>
-          println(s"unknown modality '$other' — expected image|text|audio|sem|entry:<query>")
-      }
+      runRound(round, s"$scratchRoot/idx_$round")
     } finally {
       // A failing round must still release the temp dir and the session.
       graft.MainUtil.deleteRecursively(new java.io.File(scratchRoot))

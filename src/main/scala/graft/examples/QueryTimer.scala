@@ -20,7 +20,13 @@ object QueryTimer {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
+      .foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => b.config(k, v)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_CONF entry '$kv' has no '=' (expected \"k=v;k=v\")")
+        }
+      })
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger

@@ -858,7 +858,12 @@ object Dedup {
     * corpus-wide boilerplate — exactly the minDocs >= 2 target data —
     * into a single task with no partial agg). The price is tokenizing
     * the corpus twice; both passes are embarrassingly parallel, which
-    * a single-task hot window partition is not. Hit positions then
+    * a single-task hot window partition is not. Reading `df` twice also
+    * means the two passes must see the same rows: the source must be
+    * deterministic (a table, a file set, a seeded sample) — cache or
+    * checkpoint `df` first when it is not (an unseeded sample, a
+    * directory still receiving files), or a span can be counted in one
+    * pass and positioned from different text in the other. Hit positions then
     * merge with ONE per-document window (gaps-and-islands on lag only:
     * all intervals share the same width, so "overlapping or
     * contiguous" reduces to `p <= prev_p + window`, and a running
@@ -952,8 +957,12 @@ object Dedup {
     * dup_span_frac) for docs with >= 1 duplicated span. The span-count
     * side comes narrowly from the shingle-array length; the join
     * against the duplicated-span set is a plain equi-join on the span
-    * key (hash-shuffles and scales out; NOT broadcast — at corpus
-    * scale the duplicated-span set is large). */
+    * key with NO broadcast hint — at corpus scale the duplicated-span
+    * set is large, so the static plan is a shuffle join (JoinShapeSpec
+    * pins that), and AQE decides at runtime: broadcast when the
+    * measured set is small, skew-split when a hot span is not (see the
+    * inline note). Like [[duplicateSpanRanges]] it reads `df` twice,
+    * so the source must be deterministic (cache it first otherwise). */
   def duplicateSpanFraction(df: DataFrame, idCol: String, textCol: String,
                             window: Int = 8): DataFrame = {
     val withSh = df.select(col(idCol).as("id"),

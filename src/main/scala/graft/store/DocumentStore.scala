@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft._
@@ -40,10 +40,24 @@ import graft.ops.TextSearch
   *
   * Deletion does NOT re-embed anything: vectors are stored as data, so
   * the reference's O(n) re-embed on delete (index.py:404-440, an
-  * artifact of FAISS flat indexes lacking deletion) becomes two
-  * anti-joins. Ids are reassigned densely 0..n-1 after deletion exactly
-  * like the reference (index.py:433-435) — ids are positional, not
-  * stable keys.
+  * artifact of FAISS flat indexes lacking deletion) becomes a rewrite
+  * of the survivors. Ids are reassigned densely 0..n-1 after deletion
+  * in old-id order, exactly like the reference (index.py:433-435) —
+  * ids are positional, not stable keys. A delete by ids (and upsert)
+  * renumbers with the function `old id − (deleted ids below it)`, a
+  * narrow projection over each store that relies on the snapshot's ids
+  * being dense, and checks the result is 0..n-1 before publishing; a
+  * predicate delete, whose doomed set stays distributed, renumbers
+  * through a sorted old→new id map instead.
+  *
+  * Jobs per call: the serving reads run one Spark job per pass over
+  * the data — top-k search 1; search or lookup with full metadata 2
+  * (the hits, then their ≤ k payload rows; the result is a local frame
+  * that collects with no job); a batch search 3. Snapshot reads pass
+  * the schema the writer recorded, so no read pays a footer-schema
+  * job. A mutation pays the snapshot rewrite (about ten jobs on a flat
+  * store) plus, for an add or upsert, the dedup of its batch.
+  * StoreJobCountSpec pins these counts.
   */
 final class DocumentStore private (
     val spark: SparkSession,
@@ -110,18 +124,54 @@ final class DocumentStore private (
       try body finally pinnedSnapshot.remove()
     }
 
+  // --- schema-known snapshot reads ----------------------------------
+  // A bare spark.read.parquet runs a footer-schema job before the read
+  // is even planned: one job per snapshot read, as much as the k-row
+  // lookup that follows it. A snapshot store's schema never changes
+  // after its write (incremental appends add the same projections), so
+  // writeVersion records what a read of each store it writes will see,
+  // keyed by (version, store), and reads pass it to spark.read.schema.
+  // A version this instance did not write (a reopened store) is
+  // inferred on its first read and then kept.
+  private val snapshotSchemas =
+    scala.collection.concurrent.TrieMap.empty[(Long, String), StructType]
+
+  private def readSnapshot(v: Long, store: String): DataFrame = {
+    val dir = s"${versionDir(v)}/$store"
+    spark.read.schema(snapshotSchemas.getOrElseUpdate((v, store),
+      spark.read.parquet(dir).schema)).parquet(dir)
+  }
+
+  /** Record the schema a read of `store` in version `v` returns after
+    * `written` lands there: every column nullable (parquet reads so),
+    * and a `cluster` partition column moved last as an INT (the type
+    * partition discovery infers for cluster numbers). */
+  private def recordSchema(v: Long, store: String, written: DataFrame): Unit = {
+    val data = org.apache.spark.sql.GraftSqlBridge.asNullable(
+      StructType(written.schema.filterNot(_.name == "cluster")))
+    snapshotSchemas.put((v, store),
+      if (written.columns.contains("cluster")) data.add("cluster", IntegerType, nullable = true)
+      else data)
+    ()
+  }
+
   /** Current essential store (searchable projection + vectors). */
-  def essential: DataFrame = spark.read.parquet(essentialDir(snap.version))
+  def essential: DataFrame = readSnapshot(snap.version, "essential")
 
   /** Current full-fidelity payload store. */
-  def payload: DataFrame = spark.read.parquet(payloadDir(snap.version))
+  def payload: DataFrame = readSnapshot(snap.version, "payload")
+
+  /** The essential store's stored columns, without the IVF `cluster`
+    * partition column — what every rewrite carries forward. */
+  private def essentialRows: DataFrame =
+    essential.select("id", "text", "source", "category", "metadata_hash", "vec")
 
   /** Current chunk table (multi-vector mode only): (id, vec[, cluster])
     * — one row per chunkSize-token window of each document. */
   def chunkVectors: DataFrame = {
     if (snap.chunkSize <= 0) throw new SearchException(
       "store is not multi-vector: build with StoreConfig.chunkSize > 0")
-    spark.read.parquet(chunksDir(snap.version))
+    readSnapshot(snap.version, "chunks")
   }
 
   /** Time-travel read: the essential store AS OF snapshot `version`,
@@ -130,18 +180,18 @@ final class DocumentStore private (
     * prune `keepVersions` behind the pointer) — the audit/
     * reproducibility read of a versioned store: "what did the store
     * contain when job X ran?". */
-  def essentialAt(version: Long): DataFrame = versionedRead(version, essentialDir)
+  def essentialAt(version: Long): DataFrame = versionedRead(version, "essential")
 
   /** Time-travel read of the payload store — see [[essentialAt]]. */
-  def payloadAt(version: Long): DataFrame = versionedRead(version, payloadDir)
+  def payloadAt(version: Long): DataFrame = versionedRead(version, "payload")
 
-  private def versionedRead(version: Long, dirOf: Long => String): DataFrame = {
+  private def versionedRead(version: Long, store: String): DataFrame = {
     if (!(version >= 1 && version <= manifest.version)) throw new StorageException(
       s"version $version out of range 1..${manifest.version}")
-    val dir = dirOf(version)
+    val dir = s"${versionDir(version)}/$store"
     if (!fsFor(dir).exists(hadoopPath(dir))) throw new StorageException(
       s"version $version already pruned (keepVersions=${config.keepVersions})")
-    spark.read.parquet(dir)
+    readSnapshot(version, store)
   }
 
   def documentCount: Long = manifest.count
@@ -177,34 +227,29 @@ final class DocumentStore private (
     addTexts(docs.map(_.text), docs.map(_.metadata))
 
   private def appendBuild(staged: DataFrame): Unit = mutationLock.synchronized {
-    val existing =
-      if (manifest.count > 0) Some(essential.select("id", "text", "source", "category", "metadata_hash", "vec"))
-      else None
+    val existing = if (manifest.count > 0) Some(essentialRows) else None
     // Offset from the DATA, not the manifest (same hardening as
     // addDFIncremental): a crashed incremental append can leave orphan
     // rows with ids >= manifest.count on disk; since `existing` reads
     // the disk (orphans included), minting new ids from the stale count
     // would publish DUPLICATE ids and permanently break the dense-id
     // invariant.
-    val offset = existing match {
-      case None => 0L
-      case Some(ex) => ex.agg(max("id")).head.get(0) match {
-        case null => 0L
-        case m    => m.asInstanceOf[Long] + 1L
-      }
-    }
-    val base = buildNewRows(staged, existing, offset, loadBloom())
+    val offset = existing.map(nextId).getOrElse(0L)
+    val (base, nNew) = buildNewRows(staged, existing, offset, loadBloom())
     try {
       // A fully-deduped (or empty) batch against an existing store is a
       // no-op: don't rewrite the corpus, re-fit IVF, and churn versions
       // for zero new rows (the incremental path has the same guard).
-      if (existing.isDefined && base.isEmpty) return
+      if (existing.isDefined && nNew == 0) return
       val allEssential = existing match {
         case Some(ex) => ex.unionByName(essentialProjection(base))
         case None     => essentialProjection(base)
       }
+      // Payload carry clipped below the mint offset like the chunk
+      // carry below: orphan payload rows of a crashed incremental append
+      // sit at exactly the ids this batch mints.
       val allPayload = existing match {
-        case Some(_) => payload.unionByName(payloadProjection(base))
+        case Some(_) => payload.where(col("doc_id") < offset).unionByName(payloadProjection(base))
         case None    => payloadProjection(base)
       }
       // Multi-vector append: ids are stable (append never renumbers),
@@ -224,6 +269,14 @@ final class DocumentStore private (
       writeVersion(allEssential, allPayload, carry)
     } finally base.unpersist()
   }
+
+  /** max(id) + 1 over `rows`, 0 when empty: where an append mints its
+    * ids. One aggregate job. */
+  private def nextId(rows: DataFrame): Long =
+    rows.agg(max("id")).head.get(0) match {
+      case null => 0L
+      case m    => m.asInstanceOf[Long] + 1L
+    }
 
   private def essentialProjection(base: DataFrame): DataFrame =
     base.select("id", "text", "source", "category", "metadata_hash", "vec")
@@ -251,38 +304,65 @@ final class DocumentStore private (
     if (manifest.chunkSize > 0 && config.chunkSize == manifest.chunkSize &&
         config.chunkOverlap == manifest.chunkOverlap &&
         fsFor(dir).exists(hadoopPath(dir)))
-      Some(spark.read.parquet(dir).select("id", "vec"))
+      Some(readSnapshot(manifest.version, "chunks").select("id", "vec"))
     else None
   }
 
   /** Carry surviving chunk vectors across a delete/renumber WITHOUT
-    * re-embedding: inner-join the previous snapshot's chunk table
-    * against `idMap` (__old_id → id, the dense renumbering the mutation
-    * already computes) — deleted docs' chunks drop out of the join,
-    * survivors get their new doc id, and the vectors travel as data.
-    * One equi-join shuffling (old_id, vec) pairs — survivor IO, the
-    * cost class the copy-on-write rewrite already pays — versus model
-    * inference over every chunk in the corpus. */
-  private def chunkCarry(idMap: DataFrame): Option[DataFrame] =
-    existingChunks().map(_.withColumnRenamed("id", "__old_id")
-      .join(idMap, Seq("__old_id"))
-      .select("id", "vec"))
+    * re-embedding: the previous snapshot's chunk table goes through the
+    * SAME renumbering the mutation applies to the essential and payload
+    * ids ([[renumberAfter]] or [[throughIdMap]]) — deleted docs' chunks
+    * drop out, survivors get their new doc id, and the vectors travel
+    * as data: survivor IO, the cost class the copy-on-write rewrite
+    * already pays, versus model inference over every chunk in the
+    * corpus. */
+  private def chunkCarry(renumber: Renumbering): Option[DataFrame] =
+    existingChunks().map(renumber(_, "id"))
+
+  /** Dense renumbering after deleting the driver-held ids `gone` from a
+    * snapshot whose ids are dense (0..N-1): a surviving id moves down
+    * by the number of deleted ids below it, found by binary search in a
+    * broadcast sorted copy of `gone`; rows whose id is in `gone` drop
+    * out. The map is monotone, so survivors keep their old-id order and
+    * get exactly the ids a global sort + zipWithIndex would assign — as
+    * a narrow projection: no sort, no shuffle, no job of its own. Each
+    * row maps by its OWN id, so the essential `id`, the payload
+    * `doc_id` and the chunk ids stay aligned even where the payload
+    * holds duplicate rows (a retried incremental append leaves them).
+    * Density is the caller's precondition, checked by writeVersion's
+    * `requireDense` before anything publishes. */
+  private def renumberAfter(gone: Seq[Long]): Renumbering = {
+    val sorted = spark.sparkContext.broadcast(gone.distinct.sorted.toArray)
+    // >= 0: deleted; otherwise -(number of deleted ids below) - 1.
+    val slot = udf((id: Long) => java.util.Arrays.binarySearch(sorted.value, id))
+    (df, c) => df.withColumn("__slot", slot(col(c))).where(col("__slot") < 0)
+      .withColumn(c, col(c) + col("__slot") + 1).drop("__slot")
+  }
+
+  /** Renumbering through a distributed old→new id map (`__old_id`,
+    * `id`): an inner equi-join, so rows whose id is not in the map —
+    * deleted documents, crash-orphaned payload or chunk rows — drop
+    * out. Column order is kept. */
+  private def throughIdMap(idMap: DataFrame): Renumbering =
+    (df, c) => df.join(idMap.select(col("__old_id").as(c), col("id").as("__new_id")), Seq(c))
+      .withColumn(c, col("__new_id"))
+      .select(df.columns.map(col).toIndexedSeq: _*)
 
   private def payloadProjection(base: DataFrame): DataFrame =
     base.select(col("id").as("doc_id"), col("text"), col("metadata"),
       to_json(struct(col("text"), col("metadata"))).as("payload_json"))
 
   /** Dedup + embed + project one staged batch into a CACHED base of new
-    * rows with dense ids starting at the current count. Caching is
-    * load-bearing, not an optimization: the essential and payload writes
-    * both derive from this plan, and recomputing it from a staged input
-    * that changed between the two writes would produce payload rows that
-    * do not match the essential rows already written. */
+    * rows with dense ids starting at `offset`, and its row count. Caching
+    * is load-bearing, not an optimization: the essential and payload
+    * writes both derive from this plan, and recomputing it from a staged
+    * input that changed between the two writes would produce payload
+    * rows that do not match the essential rows already written. */
   private def buildNewRows(staged: DataFrame, existing: Option[DataFrame],
                            offset: Long,
-                           bloom: Option[BloomFilter] = None): DataFrame = {
+                           bloom: Option[BloomFilter] = None): (DataFrame, Long) = {
     // Pin the staged batch ONCE before anything reads it: zipWithIndex
-    // alone runs a partition-count job plus the final compute, and the
+    // runs a partition-count job plus the final compute, and the
     // Bloom confirm both COLLECTS maybe-keys from and anti-joins
     // against plans over this input — independent executions all. A
     // nondeterministic source (unseeded sample(), rand()-derived, a
@@ -295,8 +375,10 @@ final class DocumentStore private (
       .select(col("text"), col("metadata").cast("map<string,string>"))
       .cache()
     try {
-    // Input-order sequence for first-occurrence-wins dedup.
-    val withSeq = withDenseId(pinned, "seq")
+    // Input-order sequence for first-occurrence-wins dedup: sparse but
+    // increasing in input order over the pinned partitions, which is all
+    // the window and the id assignment's sort need — no job of its own.
+    val withSeq = pinned.withColumn("seq", monotonically_increasing_id())
 
     // Intra-batch dedup: first occurrence per text (index.py:202-218).
     val firstPerText = Window.partitionBy(col("text")).orderBy(col("seq"))
@@ -348,8 +430,7 @@ final class DocumentStore private (
     // Materialize base's cache (load-bearing — see callers) from the
     // still-pinned input before the finally releases it; otherwise the
     // first downstream action would re-execute the raw staged plan.
-    base.count()
-    base
+    (base, base.count())
     } finally { pinned.unpersist(); () }
   }
 
@@ -409,7 +490,7 @@ final class DocumentStore private (
     val nonNull = maybeKeys.flatten.toSeq
     val hasNull = maybeKeys.exists(_.isEmpty)
     val inCap = DocumentStore.SafeInProbe
-    val keyTable = spark.read.parquet(keysDir)
+    val keyTable = readSnapshot(manifest.version, "dedup_keys")
     // Probe-mode split. In form: above `pushdown.inFilterThreshold`
     // (default 10) Spark degrades a parquet In filter to a [min, max]
     // RANGE filter — random shas span the whole key space, so every
@@ -526,19 +607,15 @@ final class DocumentStore private (
     * rows and so also drops any orphan payload rows. */
   def addDFIncremental(staged: DataFrame): Unit = mutationLock.synchronized {
     if (manifest.count == 0) { appendBuild(staged); return }
-    val existing = essential.select("id", "text", "source", "category", "metadata_hash", "vec")
+    val existing = essentialRows
     // Offset from the DATA, not the manifest: if a prior incremental
     // append crashed between the essential write and the manifest bump,
     // manifest.count undercounts and reusing it would hand out ids that
     // already exist on disk.
-    val offset = existing.agg(max("id")).head.get(0) match {
-      case null => 0L
-      case m    => m.asInstanceOf[Long] + 1L
-    }
+    val offset = nextId(existing)
     val bloom = loadBloom()
-    val base = buildNewRows(staged, Some(existing), offset, bloom)
+    val (base, nNew) = buildNewRows(staged, Some(existing), offset, bloom)
     try {
-      val nNew = base.count()
       if (nNew > 0) {
         // Fold the new keys into the persisted Bloom filter BEFORE the
         // essential rows publish (batch-sized driver work; capacity was
@@ -643,9 +720,7 @@ final class DocumentStore private (
     * instead (rebuilding its per-snapshot index is an explicit
     * [[buildPqIndex]] + [[tunePqCandidates]] decision). */
   def compact(): Unit = mutationLock.synchronized {
-    writeVersion(
-      essential.select("id", "text", "source", "category", "metadata_hash", "vec"),
-      payload.dropDuplicates("doc_id"))
+    writeVersion(essentialRows, payload.dropDuplicates("doc_id"))
     readTuningHistory("nprobe").foreach { h =>
       val dir = s"${tuningDir(manifest.version)}/nprobe"
       if (manifest.nlist > 0 && !fsFor(dir).exists(hadoopPath(dir)))
@@ -661,12 +736,33 @@ final class DocumentStore private (
     * replace the from-scratch chunk+embed rebuild. Mutation callers pass
     * the previous snapshot's chunk table carried through their delete/
     * renumber (see [[chunkCarry]]); None rebuilds from the essential
-    * text (first build, compact(), chunk-config change). */
+    * text (first build, compact(), chunk-config change).
+    *
+    * `requireDense`: refuse to publish (StorageException, nothing
+    * written) unless the new snapshot's ids are exactly 0..n-1 — the
+    * invariant [[renumberAfter]] relies on. The witness rides the
+    * aggregate that materializes the essential cache, so it costs no
+    * job. Payload and carried chunk rows at ids >= n are then dropped:
+    * crash-orphaned rows (ids past every essential row, see
+    * addDFIncremental) that the renumbering shifted down with the
+    * survivors, and that would otherwise attach a dead batch's
+    * vectors and payload to the ids the next append mints. Every
+    * schema written is recorded for [[readSnapshot]]. */
   private def writeVersion(essentialDf: DataFrame, payloadDf: DataFrame,
-                           carriedChunks: Option[DataFrame] = None): Unit = {
+                           carriedChunks: Option[DataFrame] = None,
+                           requireDense: Boolean = false): Unit = {
     val v = manifest.version + 1
     val ess = essentialDf.cache()
-    val count = ess.count()
+    val stats = ess.agg(org.apache.spark.sql.functions.count(lit(1)), max("id")).head
+    val count = stats.getLong(0)
+    if (requireDense && !stats.isNullAt(1) && stats.getLong(1) + 1 != count) {
+      ess.unpersist()
+      throw new StorageException(s"snapshot ids are not dense: $count documents but max id " +
+        s"${stats.getLong(1)}; delete and upsert renumber ids only on a dense (0..n-1) store")
+    }
+    val payloadRows = if (requireDense) payloadDf.where(col("doc_id") < count) else payloadDf
+    val chunkCarried =
+      if (requireDense) carriedChunks.map(_.where(col("id") < count)) else carriedChunks
 
     var modelOpt: Option[IvfIndex.Model] = None
     if (IvfIndex.shouldUseIvf(config.nlist, count)) {
@@ -679,9 +775,10 @@ final class DocumentStore private (
       modelOpt = Some(model)
       // Within each cluster partition, sort by id so point lookups still
       // prune row groups on the id min/max statistics.
-      ess.withColumn("cluster", model.assignCol(col("vec")))
-        .sortWithinPartitions("cluster", "id")
+      val clustered = ess.withColumn("cluster", model.assignCol(col("vec")))
+      clustered.sortWithinPartitions("cluster", "id")
         .write.mode("overwrite").partitionBy("cluster").parquet(essentialDir(v))
+      recordSchema(v, "essential", clustered)
       import spark.implicits._
       model.centroids.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toDF("cluster", "centroid")
@@ -706,12 +803,14 @@ final class DocumentStore private (
       ess.repartitionByRange(nParts, col("id"))
         .sortWithinPartitions("id")
         .write.mode("overwrite").parquet(essentialDir(v))
+      recordSchema(v, "essential", ess)
     }
     // Layout baseline for the small-files advisory: the data-file
     // count this fresh write produced (one listing; appends grow the
     // count from here, recommendCompaction compares against it).
     writeLayoutBaseline(v, countDataFiles(essentialDir(v)))
-    payloadDf.write.mode("overwrite").parquet(payloadDir(v))
+    payloadRows.write.mode("overwrite").parquet(payloadDir(v))
+    recordSchema(v, "payload", payloadDf)
     // Ingest-dedup Bloom filter for the new snapshot: one narrow pass
     // over the (cached) essential rows; sized to the snapshot count.
     if (config.dedupBloomFpp > 0.0) {
@@ -729,10 +828,11 @@ final class DocumentStore private (
       // ~72 B/row; ≤ 4M keys per range partition keeps row-group stats
       // selective.
       val kparts = math.max(1L, (count + 3999999L) / 4000000L).toInt
-      ess.select(sha2(col("text"), 256).as("k"), col("id"))
-        .repartitionByRange(kparts, col("k"))
+      val keys = ess.select(sha2(col("text"), 256).as("k"), col("id"))
+      keys.repartitionByRange(kparts, col("k"))
         .sortWithinPartitions("k")
         .write.mode("overwrite").parquet(dedupKeysDir(v))
+      recordSchema(v, "dedup_keys", keys)
     }
     // Multi-vector mode: chunk VECTORS are data, not derived state —
     // mutation callers carry survivors through the delete/renumber
@@ -752,15 +852,18 @@ final class DocumentStore private (
     // metric space), which is what makes searchMaxSim's nprobe pruning
     // file-level.
     if (config.chunkSize > 0) {
-      val ch = carriedChunks.getOrElse(chunkRows(ess))
-      modelOpt match {
+      val ch = chunkCarried.getOrElse(chunkRows(ess))
+      val laidOut = modelOpt match {
         case Some(model) =>
-          ch.withColumn("cluster", model.assignCol(col("vec")))
-            .sortWithinPartitions("cluster", "id")
+          val clustered = ch.withColumn("cluster", model.assignCol(col("vec")))
+          clustered.sortWithinPartitions("cluster", "id")
             .write.mode("overwrite").partitionBy("cluster").parquet(chunksDir(v))
+          clustered
         case None =>
           ch.write.mode("overwrite").parquet(chunksDir(v))
+          ch
       }
+      recordSchema(v, "chunks", laidOut)
     }
     ess.unpersist()
 
@@ -797,6 +900,7 @@ final class DocumentStore private (
         deleteDir(spark, versionDir(stale))
       }
     }
+    snapshotSchemas.keys.filter(_._1 <= cutoff).foreach(snapshotSchemas.remove)
     // Measured-recall auto-tuning (opt-in): every IVF snapshot build
     // re-measures the nprobe/recall trade-off on the fresh clustering
     // and persists the curve; searches pick up the choice via
@@ -1641,7 +1745,7 @@ final class DocumentStore private (
     if (snap.chunkSize <= 0) throw new SearchException(
       "store is not multi-vector: build with StoreConfig.chunkSize > 0")
     val qv = embedder.embedQuery(query)
-    val chunks = spark.read.parquet(chunksDir(snap.version))
+    val chunks = readSnapshot(snap.version, "chunks")
     val space = loadCentroids() match {
       case Some(model) =>
         val probes = model.nearestCentroids(qv.toSeq, effectiveNprobe)
@@ -1783,31 +1887,27 @@ final class DocumentStore private (
     * the number of documents removed. */
   def deleteWhere(condition: org.apache.spark.sql.Column): Long = mutationLock.synchronized {
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
-    val doomedIds = essential.where(condition).select("id")
+    val doomedIds = essential.where(condition).select(col("id").as("__old_id"))
     val removed = doomedIds.count()
     if (removed == 0) return 0L
-    val survivorsE = essential.join(doomedIds, Seq("id"), "left_anti")
-    // Whole-store wipe is decided by SURVIVORS being empty, never by
-    // `removed >= manifest.count`: crash-orphaned essential rows (ids
-    // >= manifest.count, see addDFIncremental) can inflate the match
-    // count past the live total, and the count-based test would then
-    // drop() surviving documents — silent data loss.
-    if (survivorsE.isEmpty) { drop(); return removed }
-    val survivorsP = payload.join(
-      doomedIds.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
-    // Old id retained through the renumbering for the multi-vector
-    // chunk carry — see deleteByIds for the caching rationale.
-    val chunked = manifest.chunkSize > 0
-    val reKeyed = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
-    val reBase = if (chunked)
-      reKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else reKeyed
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    try writeVersion(reE, reP, chunkCarry(reBase.select("__old_id", "id")))
-    finally if (chunked) { reBase.unpersist(); () }
+    // The doomed set stays distributed (a broad predicate can match
+    // hundreds of millions of rows), so the dense old→new map comes
+    // from a global sort + zipWithIndex over the survivors' ids alone.
+    // Persisted: the essential, payload and chunk stores all renumber
+    // through this ONE materialization, so they cannot disagree.
+    val idMap = withDenseId(essential.select(col("id").as("__old_id"))
+        .join(doomedIds, Seq("__old_id"), "left_anti").orderBy("__old_id"), "id")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // Whole-store wipe is decided by SURVIVORS being empty, never by
+      // `removed >= manifest.count`: crash-orphaned essential rows (ids
+      // >= manifest.count, see addDFIncremental) can inflate the match
+      // count past the live total, and the count-based test would then
+      // drop() surviving documents — silent data loss.
+      if (idMap.isEmpty) { drop(); return removed }
+      val renumber = throughIdMap(idMap)
+      writeVersion(renumber(essentialRows, "id"), renumber(payload, "doc_id"), chunkCarry(renumber))
+    } finally { idMap.unpersist(); () }
     removed
   }
 
@@ -1900,28 +2000,37 @@ final class DocumentStore private (
   }
 
   /** Full-metadata enrichment (reference Q6,
-    * vectorstore.py:782-813). Scale shape: the hit ids (k rows) are
+    * vectorstore.py:782-813). Scale shape: the hit rows (k of them) are
     * collected driver-side — exactly the reference's positional lookups
-    * — and pushed into the payload scan as an `isin` filter (parquet
-    * predicate pushdown), so only the k matching payload rows are read;
-    * those are then the BUILD side of the broadcast join. (Broadcasting
-    * the hits themselves would be ignored: Spark cannot build the
-    * stream-preserved left side of a LEFT OUTER join.) */
+    * — and their ids pushed into the payload scan as an `isin` filter
+    * (parquet predicate pushdown), so only the ≤ k matching payload rows
+    * are read, and collected too. The left join of the two is then
+    * driver arithmetic over k rows, returned as a LOCAL frame: two jobs
+    * in all, and collecting the result runs none. Left-join semantics:
+    * one output row per matching payload row; a hit with no payload row
+    * keeps `metadata = null` and `metadata_type = "essential"`. */
   private def enhanceWithFullMetadata(hits: DataFrame): DataFrame = {
     // Materialize the k hit rows: an orderBy.limit subquery left under a
     // join is fragile (downstream limit pushdown can compose with it and
     // surface rows outside the top-k — see SparkEntry.qEnrichmentJoin).
-    val hitRows = hits.drop("metadata_type").collect()
-    val local = spark.createDataFrame(
-      spark.sparkContext.parallelize(hitRows.toIndexedSeq, 1),
-      hits.drop("metadata_type").schema)
-    val ids = hitRows.map(_.getAs[Long]("doc_id")).toIndexedSeq
+    val hitsData = hits.drop("metadata_type")
+    val hitRows = hitsData.collect()
     val matching = payload
-      .where(col("doc_id").isin(ids: _*))
+      .where(col("doc_id").isin(hitRows.map(_.getAs[Long]("doc_id")).distinct.toIndexedSeq: _*))
       .select(col("doc_id"), col("metadata"))
-    local.join(broadcast(matching), Seq("doc_id"), "left")
-      .withColumn("metadata_type",
-        when(col("metadata").isNotNull, lit("full")).otherwise(lit("essential")))
+    val metaByDoc = matching.collect().toSeq.groupBy(_.getLong(0))
+    val rows = hitRows.toSeq.flatMap { h =>
+      metaByDoc.get(h.getAs[Long]("doc_id")) match {
+        case Some(ms) => ms.map { m =>
+          Row.fromSeq(h.toSeq :+ m.get(1) :+ (if (m.isNullAt(1)) "essential" else "full"))
+        }
+        case None => Seq(Row.fromSeq(h.toSeq :+ null :+ "essential"))
+      }
+    }
+    val schema = hitsData.schema
+      .add(matching.schema("metadata").copy(nullable = true))
+      .add(StructField("metadata_type", StringType, nullable = false))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Point lookup by id (reference Q7, retriever.py:258-316). */
@@ -1956,41 +2065,36 @@ final class DocumentStore private (
   // ------------------------------------------------------------------
 
   /** Delete by ids; returns false on empty input, throws on invalid ids
-    * (reference delete matrix, tests/test_index.py:162-261). Ids are
-    * recompacted to 0..n-1 afterwards (index.py:433-435). Deleting the
-    * last document removes the store (vectorstore.py:482-490). */
+    * (reference delete matrix, tests/test_index.py:162-261). Deleting
+    * the last document removes the store (vectorstore.py:482-490).
+    *
+    * Ids are recompacted to 0..n-1 afterwards, in old-id order
+    * (index.py:433-435), by [[renumberAfter]]: a surviving id becomes
+    * `old id − (deleted ids below it)`, one narrow projection applied
+    * alike to the essential `id`, the payload `doc_id` and the chunk
+    * ids. That function is dense only over a dense store, so the new
+    * snapshot is checked before it publishes: ids that are not 0..n-1
+    * throw StorageException and leave the store as it was. Every API
+    * path keeps ids dense — appends mint from max(id)+1, deletes
+    * renumber densely, and a retried crashed incremental append
+    * continues its range. Payload and chunk rows a crashed incremental
+    * append left past the last essential id would renumber into the
+    * range the next append mints; the new snapshot drops every such
+    * row at or past its count.
+    *
+    * Jobs: none beyond [[writeVersion]]'s snapshot rewrite (about ten
+    * on a flat store: the cache-materializing aggregate, the range
+    * sort and write of essential, the payload write, the Bloom filter
+    * and the dedup key table). */
   def deleteByIds(ids: Seq[Long]): Boolean = mutationLock.synchronized {
     if (ids.isEmpty) return false
     if (manifest.count == 0) throw new IndexException("store is empty or not built")
     val bad = ids.filter(i => i < 0 || i >= manifest.count)
     if (bad.nonEmpty) throw new IndexException(s"invalid ids: ${bad.mkString(",")} (count=${manifest.count})")
-
-    import spark.implicits._
-    val idsDf = ids.toDF("id")
-    val survivorsE = essential.join(broadcast(idsDf), Seq("id"), "left_anti")
-    val survivorsP = payload.join(
-      broadcast(idsDf.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left_anti")
-
     if (manifest.count - ids.distinct.length <= 0) { drop(); return true }
-
-    // Dense id reassignment preserving order (index.py:433-435). The
-    // old id rides along as __old_id: multi-vector stores use the
-    // old→new map to carry surviving chunk vectors instead of
-    // re-embedding the corpus (see chunkCarry). Cached when chunked —
-    // the essential write and the carry join both consume the
-    // renumbering, and ONE materialization guarantees they see the
-    // same assignment.
-    val chunked = manifest.chunkSize > 0
-    val reKeyed = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
-    val reBase = if (chunked)
-      reKeyed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else reKeyed
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    try writeVersion(reE, reP, chunkCarry(reBase.select("__old_id", "id")))
-    finally if (chunked) { reBase.unpersist(); () }
+    val renumber = renumberAfter(ids)
+    writeVersion(renumber(essentialRows, "id"), renumber(payload, "doc_id"),
+      chunkCarry(renumber), requireDense = true)
     true
   }
 
@@ -2040,7 +2144,10 @@ final class DocumentStore private (
     * re-ingested text (first occurrence wins, index.py:202-218) —
     * upsert is the "latest wins" complement. Only the FIRST (lowest-id)
     * occurrence per matching text is replaced, mirroring
-    * [[deleteByTexts]]; ids recompact exactly as any delete does.
+    * [[deleteByTexts]]; survivor ids recompact exactly as
+    * [[deleteByIds]] does (same [[renumberAfter]] function, same
+    * density precondition and check), and the incoming rows take the
+    * ids after them.
     *
     * Atomicity: the whole merge — anti-join out the replaced rows,
     * recompact survivor ids, build the incoming batch at the survivor
@@ -2060,47 +2167,45 @@ final class DocumentStore private (
       .groupBy("text").agg(min("id").as("id"))
       .select("id").as[Long].collect().toSeq
     if (firstIds.isEmpty) return addTexts(texts, metadatas) // pure append
-    val idsDf = firstIds.toDF("id")
-    val survivorsE = essential.join(broadcast(idsDf), Seq("id"), "left_anti")
-    val survivorsP = payload.join(
-      broadcast(idsDf.withColumnRenamed("id", "doc_id")), Seq("doc_id"), "left_anti")
     // Dense-id recompaction of the survivors (delete semantics,
-    // index.py:433-435), then the incoming batch builds at the
-    // survivor-count offset — same dedup-vs-store as any ingest, now
-    // against the survivors (later duplicate copies of a matched text
-    // still win over the incoming row, as in the composed form). The
-    // persisted Bloom is NOT passed: it still contains the just-replaced
-    // texts, and correctness here needs the exact anti-join anyway.
-    // CACHED like buildNewRows' base and writeVersion's ess: the
-    // recompaction pipeline (anti-join + global orderBy + zipWithIndex)
-    // is consumed at least three times — the survivor count, the
-    // dedup anti-join inside buildNewRows, and the snapshot write —
-    // and uncached it would re-scan the corpus each time.
-    val reBase = withDenseId(
-      survivorsE.withColumnRenamed("id", "__old_id").orderBy("__old_id"), "id")
+    // index.py:433-435), then the incoming batch builds after them —
+    // same dedup-vs-store as any ingest, now against the survivors
+    // (later duplicate copies of a matched text still win over the
+    // incoming row, as in the composed form). The persisted Bloom is
+    // NOT passed: it still contains the just-replaced texts, and
+    // correctness here needs the exact anti-join anyway. CACHED like
+    // buildNewRows' base and writeVersion's ess: the survivors are
+    // consumed three times — the offset aggregate, the dedup anti-join
+    // inside buildNewRows, and the snapshot write — and uncached each
+    // would re-scan the corpus.
+    val renumber = renumberAfter(firstIds)
+    val reE = renumber(essentialRows, "id")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reE = reBase.select("id", "text", "source", "category", "metadata_hash", "vec")
-    val reP = withDenseId(survivorsP.orderBy("doc_id").drop("doc_id"), "doc_id")
-      .select("doc_id", "text", "metadata", "payload_json")
-    val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
-    val staged = texts.zip(metas).toDF("text", "metadata")
-    // Offset = ACTUAL survivor count (recompacted ids are dense
-    // 0..n-1): deriving it from manifest.count would collide with the
-    // recompacted ids when crash-orphaned rows inflate the on-disk row
-    // count past the manifest (see appendBuild). Counting reE (not
-    // survivorsE) also forces the cache before its other consumers.
-    val survivorCount = reE.count()
-    val base = buildNewRows(staged, Some(reE), survivorCount)
-    // Multi-vector carry: survivors' chunk vectors travel through the
-    // old→new id map un-re-embedded; only the INCOMING batch's chunks
-    // are embedded (its text may differ from anything replaced).
-    val carrySurv = chunkCarry(reBase.select("__old_id", "id"))
     try {
-      if (base.isEmpty) writeVersion(reE, reP, carrySurv) // publish just the deletes
-      else writeVersion(reE.unionByName(essentialProjection(base)),
-        reP.unionByName(payloadProjection(base)),
-        carrySurv.map(_.unionByName(chunkRows(essentialProjection(base)))))
-    } finally { base.unpersist(); reBase.unpersist(); () }
+      val metas = if (metadatas.isEmpty) Seq.fill(texts.length)(Map.empty[String, String]) else metadatas
+      val staged = texts.zip(metas).toDF("text", "metadata")
+      // Offset from the DATA (max survivor id + 1, which also forces
+      // the cache before its other consumers), as appendBuild mints
+      // it: manifest.count would collide with crash-orphaned rows that
+      // inflate the on-disk ids past the manifest.
+      val offset = nextId(reE)
+      val (base, nNew) = buildNewRows(staged, Some(reE), offset)
+      // Multi-vector carry: survivors' chunk vectors go through the
+      // same renumbering un-re-embedded; only the INCOMING batch's
+      // chunks are embedded (its text may differ from anything
+      // replaced). Payload and chunk carries are clipped below the
+      // mint offset, as in appendBuild: crash-orphaned rows renumber
+      // to exactly the ids the incoming batch takes.
+      val carrySurv = chunkCarry(renumber).map(_.where(col("id") < offset))
+      val reP = renumber(payload, "doc_id").where(col("doc_id") < offset)
+      try {
+        if (nNew == 0) writeVersion(reE, reP, carrySurv, requireDense = true) // just the deletes
+        else writeVersion(reE.unionByName(essentialProjection(base)),
+          reP.unionByName(payloadProjection(base)),
+          carrySurv.map(_.unionByName(chunkRows(essentialProjection(base)))),
+          requireDense = true)
+      } finally base.unpersist()
+    } finally { reE.unpersist(); () }
     texts.indices.map(_.toString)
   }
 
@@ -2113,10 +2218,11 @@ final class DocumentStore private (
     // version-keyed cache for the old generation must go: the global
     // centroid cache (keyed (path, version) — a collision would prune
     // searches with the DEAD corpus's centroids) and this instance's
-    // tuned-nprobe memo.
+    // tuned-nprobe memo and its recorded snapshot schemas.
     DocumentStore.invalidateModelCaches(path)
     tuningCache.clear()
     pqTuningCache.clear()
+    snapshotSchemas.clear()
   }
 
   // ------------------------------------------------------------------
@@ -2182,6 +2288,11 @@ final class DocumentStore private (
 }
 
 object DocumentStore {
+
+  /** An id renumbering applied to one store of a snapshot: the frame
+    * and the name of its id column in, the surviving rows renumbered
+    * out (see renumberAfter, throughIdMap). */
+  private type Renumbering = (DataFrame, String) => DataFrame
 
   /** Static PQ rerank depth when no measured curve exists for the
     * snapshot — see [[DocumentStore.similaritySearchPq]]. */

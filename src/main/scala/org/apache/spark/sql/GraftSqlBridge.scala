@@ -12,6 +12,10 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `schema` with every field (nested ones too) nullable — what a
+    * parquet read reports for data written with `schema`. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Column -> ANALYZABLE Catalyst tree. [[expression]] wraps the
     * column's node in an opaque `ColumnNodeExpression` — fine when the
     * classic Dataset API converts it later, but a FunctionRegistry

@@ -804,6 +804,46 @@ class DocumentStoreSpec extends SparkSpec {
     assert(store.chunkVectors.where(col("id") === n).count() == 1)
   }
 
+  test("delete and upsert drop crash-orphaned chunk and payload rows instead of renumbering them onto new docs") {
+    import org.apache.spark.sql.functions.{col, lit, max}
+    import spark.implicits._
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir,
+      Seq("alpha beta gamma delta epsilon", "one two three four five", "red green blue cyan pink"), Nil,
+      StoreConfig(chunkSize = 5, chunkOverlap = 0), emb)
+    val poison = "secret poison passage tokens here"
+    // addDFIncremental's crash window: chunk and payload rows landed for
+    // a batch whose essential rows never published, at the first id
+    // past every live one. Deletes shift them down with the survivors,
+    // onto exactly the ids the next mint hands out.
+    def plantOrphans(): Unit = {
+      val v = store.currentManifest.version
+      val n = store.essential.agg(max("id")).head.getLong(0) + 1
+      Seq((n, emb.embedQuery(poison).toSeq)).toDF("id", "vec")
+        .write.mode("append").parquet(s"$dir/v$v/chunks")
+      store.payload.limit(1).withColumn("doc_id", lit(n)).withColumn("text", lit(poison))
+        .write.mode("append").parquet(s"$dir/v$v/payload")
+    }
+    def assertClean(step: String): Unit = {
+      val hit = store.searchMaxSim(poison, k = 1).collect().head
+      assert(hit.getAs[Double]("similarity") < 0.99, s"poisoned hit after $step: $hit")
+      assert(store.payload.where(col("text") === poison).count() == 0, s"orphan payload after $step")
+      assertAligned(store)
+    }
+    plantOrphans()
+    store.upsertTexts(Seq("one two three four five", "innocent upserted doc about gardens"))
+    assertClean("upsertTexts")
+    plantOrphans()
+    store.deleteByIds(Seq(0L))
+    store.addDFIncremental(Seq(("innocent appended doc about rivers", Map.empty[String, String]))
+      .toDF("text", "metadata"))
+    assertClean("deleteByIds + addDFIncremental")
+    plantOrphans()
+    store.addTexts(Seq("innocent rebuilt doc about mountains"))
+    assertClean("addTexts")
+    assert(store.essential.select("id").as[Long].collect().sorted.toSeq == (0L until 5L))
+  }
+
   test("mutate-then-search refreshes centroids with NO manual invalidation (versioned cache)") {
     import graft.index.IvfIndex
     val many = (0 until 150).map(i => s"document $i in family ${i % 5}")
@@ -1312,5 +1352,144 @@ class DocumentStoreSpec extends SparkSpec {
     store.addDF(nullRow) // second batch: the null-text doc is a DUP now
     assert(store.documentCount == after1,
       s"null-text doc re-ingested: ${store.documentCount} != $after1")
+  }
+
+  // --- renumbering after deletes: alignment, density, schemas --------
+
+  /** Every payload row's text equals the essential text at its doc_id,
+    * and every essential id has a payload row. */
+  private def assertAligned(store: DocumentStore): Unit = {
+    val ess = store.essential.select("id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val pay = store.payload.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1))
+    val misaligned = pay.filter { case (id, t) => !ess.get(id).contains(t) }
+    assert(misaligned.isEmpty, s"payload rows misaligned with essential: ${misaligned.toSeq}")
+    assert(ess.keySet == pay.map(_._1).toSet, s"essential ids without payload: ${ess.keySet -- pay.map(_._1)}")
+  }
+
+  test("payload stays aligned after deleteByIds, deleteWhere and upsertTexts despite duplicate payload rows") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmp()
+    val names = Seq("alpha", "bravo", "charlie", "delta", "echo", "foxtrot", "golf")
+    val store = DocumentStore.fromTexts(spark, dir, names, Nil, StoreConfig(), emb)
+    // A retried crashed incremental append leaves a duplicate payload
+    // row (same doc_id) behind; compact() is its only heal.
+    val v = store.currentManifest.version
+    val dup = store.payload.where(col("doc_id") === 2L).collect()
+    spark.createDataFrame(java.util.Arrays.asList(dup: _*), store.payload.schema)
+      .write.mode("append").parquet(s"$dir/v$v/payload")
+    assert(store.payload.count() == names.length + 1)
+    store.deleteByIds(Seq(0L))
+    assertAligned(store)
+    assert(store.essential.where(col("id") === 2L).select("text").head.getString(0) == "delta")
+    store.deleteWhere(col("text") === "bravo")
+    assertAligned(store)
+    store.upsertTexts(Seq("delta", "hotel"), Seq(Map("source" -> "u.txt"), Map("source" -> "h.txt")))
+    assertAligned(store)
+    val inOrder = store.essential.select("id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+    assert(inOrder == Seq("charlie", "echo", "foxtrot", "golf", "delta", "hotel")
+      .zipWithIndex.map { case (t, i) => i.toLong -> t })
+  }
+
+  test("delete and upsert refuse to publish over non-dense ids (StorageException, store unchanged)") {
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir,
+      Seq("doc zero", "doc one"), Nil, StoreConfig(), emb)
+    // The gap fabricated as in the crash-orphan spec above: an orphan
+    // essential row at id 7, then an append that mints past it.
+    val v0 = store.currentManifest.version
+    store.essential.limit(1)
+      .withColumn("id", org.apache.spark.sql.functions.lit(7L))
+      .withColumn("text", org.apache.spark.sql.functions.lit("orphan row"))
+      .write.mode("append").parquet(s"$dir/v$v0/essential")
+    store.addTexts(Seq("doc two"))
+    val v = store.currentManifest.version
+    val before = store.essential.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(before == Seq(0L, 1L, 7L, 8L))
+    val e1 = intercept[graft.StorageException](store.deleteByIds(Seq(0L)))
+    assert(e1.getMessage.contains("not dense"), e1.getMessage)
+    intercept[graft.StorageException](store.upsertTexts(Seq("doc one")))
+    assert(store.currentManifest.version == v && store.documentCount == 4)
+    assert(store.essential.select("id").collect().map(_.getLong(0)).sorted.toSeq == before)
+  }
+
+  test("delete and upsert renumber to 0..n-1 in old-id order on flat, IVF and chunked stores") {
+    // 70 documents: enough for a 2-list IVF fit (30 rows per list).
+    val base = (0 until 70).map(i => s"document number $i talks about subject ${i % 5} and item w$i")
+    val configs = Seq(
+      "flat" -> StoreConfig(),
+      "ivf" -> StoreConfig(nlist = 2, nprobe = 2),
+      "chunked" -> StoreConfig(chunkSize = 4, chunkOverlap = 0))
+    for ((name, cfg) <- configs) {
+      val store = DocumentStore.fromTexts(spark, tmp(), base, Nil, cfg, emb)
+      var model = base.toVector
+      def check(step: String): Unit = {
+        val got = store.essential.select("id", "text").collect()
+          .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+        assert(got == model.zipWithIndex.map { case (t, i) => i.toLong -> t }, s"$name after $step")
+        assertAligned(store)
+        if (name == "chunked") {
+          val chunkIds = store.chunkVectors.select("id").distinct().collect().map(_.getLong(0)).toSet
+          assert(chunkIds == model.indices.map(_.toLong).toSet, s"$name chunk ids after $step")
+        }
+      }
+      store.deleteByIds(Seq(0L, 5L, 6L, 69L))
+      model = model.zipWithIndex.collect { case (t, i) if !Set(0, 5, 6, 69)(i) => t }
+      check("deleteByIds")
+      val ups = Seq(model(3), "a brand new upserted document", model(10))
+      store.upsertTexts(ups)
+      model = model.filterNot(Set(model(3), model(10))) ++ ups
+      check("upsertTexts")
+      if (name == "ivf") assert(store.currentManifest.nlist == 2)
+    }
+  }
+
+  test("snapshot reads use the writer-recorded schema, equal to what parquet infers") {
+    val dir = tmp()
+    val many = (0 until 64).map(i => s"${texts(i % texts.length)} copy $i")
+    val store = DocumentStore.fromTexts(spark, dir, many, (0 until 64).map(i => metas(i % metas.length)),
+      StoreConfig(nlist = 2, chunkSize = 4, chunkOverlap = 0), emb)
+    def inferred(name: String) =
+      spark.read.parquet(s"$dir/v${store.currentManifest.version}/$name").schema
+    def check(): Unit = {
+      assert(store.essential.schema == inferred("essential"))
+      assert(store.payload.schema == inferred("payload"))
+      assert(store.chunkVectors.schema == inferred("chunks"))
+    }
+    assert(store.currentManifest.nlist == 2 && store.essential.columns.last == "cluster")
+    check()
+    store.deleteByIds(Seq(1L))
+    check()
+    store.addDFIncremental({
+      import spark.implicits._
+      Seq(("an appended row", Map("source" -> "a.txt"))).toDF("text", "metadata")
+    })
+    check()
+    val reloaded = DocumentStore.load(spark, dir, emb)
+    assert(reloaded.essential.schema == store.essential.schema)
+  }
+
+  test("full-metadata enrichment keeps left-join semantics: null metadata for a missing payload row, one row per payload row") {
+    import org.apache.spark.sql.functions.col
+    val dir = tmp()
+    val store = DocumentStore.fromTexts(spark, dir, texts, metas, StoreConfig(), emb)
+    val v = store.currentManifest.version
+    // Payload rewritten without doc 1 and with doc 2 twice.
+    val kept = store.payload.where(col("doc_id") =!= 1L).collect() ++
+      store.payload.where(col("doc_id") === 2L).collect()
+    spark.createDataFrame(java.util.Arrays.asList(kept: _*), store.payload.schema)
+      .write.mode("overwrite").parquet(s"$dir/v$v/payload")
+    val out = store.getDocumentsByIds(Seq(0L, 1L, 2L), includeFullMetadata = true)
+    assert(out.columns.toSeq == Seq("doc_id", "text", "source", "category", "similarity",
+      "metadata", "metadata_type"))
+    assert(!out.schema("metadata_type").nullable && out.schema("metadata").nullable)
+    val rows = out.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("metadata_type"),
+      Option(r.getAs[Map[String, String]]("metadata")))).sortBy(_._1)
+    assert(rows.map(r => (r._1, r._2)).toSeq ==
+      Seq((0L, "full"), (1L, "essential"), (2L, "full"), (2L, "full")))
+    assert(rows.find(_._1 == 1L).get._3.isEmpty)
+    assert(rows.find(_._1 == 0L).get._3.contains(metas.head))
   }
 }
